@@ -357,8 +357,11 @@ def permutation_importance(
 def single_row_inference(
     spark: SparkSession, model: PipelineModel, row: dict[str, float]
 ) -> float:
-    """M9: the /predict serving path — 1-row DataFrame through the same
-    pipeline, expm1 back-transform when the model was log-trained
-    (main.py:278-310)."""
+    """M9: one row through the whole pipeline as a 1-row DataFrame
+    (main.py:278-310) — the reference/oracle form of a prediction,
+    returned on the model's own scale (no expm1 back-transform). The
+    server does not run it: ``serving.PredictService`` calls the final
+    stage's ``predict`` on the assembled vector directly, and its
+    tests pin that value equal to this one."""
     df = spark.createDataFrame([tuple(row[f] for f in FEATURES)], FEATURES)
     return float(model.transform(df).select("prediction").first()[0])

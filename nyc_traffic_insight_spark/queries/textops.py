@@ -2993,17 +2993,18 @@ def gopher_rules_frame(d: DataFrame) -> DataFrame:
 
     r16 single-evaluation shape: the four O(len) text scans (two
     splits, the alpha/stopword filters, the whitespace strip) are
-    computed ONCE per row into a struct materialized behind a
+    computed into one struct per row, materialized behind a
     Generate barrier — ``explode(array(struct))``. CollapseProject
     inlines a withColumn expression into every consumer (the r15
     lesson), but it cannot collapse a Project INTO a Generate's
     input, so the generator output is a bound attribute and every
     downstream column (ten of them; `keep` alone referenced all
     four counts) is a field read. The r15 form re-evaluated the
-    splits ~19× per row (plan: 41 `split(` sites); this form runs
-    each scan once. Values are bit-identical — the per-column
-    expressions are unchanged, only their shared subterms are
-    evaluated once."""
+    splits ~19× per row (plan: 41 `split(` sites); this form has 3:
+    ``low_toks`` once and ``toks`` twice, because the struct's ``nw``
+    and ``na`` fields each carry their own copy of that split. Values
+    are bit-identical — the per-column expressions are unchanged,
+    only their shared subterms are evaluated fewer times."""
     toks = F.split(F.trim("text"), r"\s+")
     low_toks = F.split(F.lower("text"), r"\s+")
     stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])

@@ -20,10 +20,10 @@ runs in this container and anywhere Python runs:
   partition-pruned slice → HTML), POST /predict (JSON features →
   prediction), GET /health.
 
-Serving stays driver-side by design (SURVEY §3.3): each request runs
-one partition-pruned Spark query or one 1-row model transform; the
-engine's job is making that cheap, which directory pruning and the
-once-loaded PipelineModel do. The HTTP layer is a thin synchronous
+Serving stays driver-side by design (SURVEY §3.3): a /map request runs
+one partition-pruned Spark query over the table's start-up schema; a
+/predict request is one direct call into the once-loaded model's final
+stage and runs no Spark job. The HTTP layer is a thin synchronous
 shell over those calls — exactly the reference's architecture, minus
 the per-request 515 MB download.
 """
@@ -319,13 +319,21 @@ def serve(
     port at ``server.server_address[1]``; port=0 picks a free one).
     Call ``server.shutdown()`` to stop. The /map route runs
     ``map_view`` (partition-pruned, request cost ∝ one borough-year
-    slice) and renders inline-SVG HTML."""
+    slice) and renders inline-SVG HTML.
+
+    The table's schema is read from its parquet footers once, here.
+    Each request reads the table with that schema, which skips footer
+    inference but still lists the partition directories, so a table
+    republished in place by ``publish_map_table`` (same schema) is
+    served fresh; a DataFrame kept across requests would point at the
+    files the overwrite deleted."""
     from nyc_traffic_insight_spark.serving import map_view
 
+    schema = spark.read.parquet(map_path).schema
+
     def map_slice(borough: str, year: int) -> list[dict]:
-        return [
-            r.asDict() for r in map_view(spark, map_path, borough, year).collect()
-        ]
+        table = spark.read.schema(schema).parquet(map_path)
+        return [r.asDict() for r in map_view(table, borough, year).collect()]
 
     srv = EngineHTTPServer(
         (host, port), map_slice, predict_service, map_fields

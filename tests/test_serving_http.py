@@ -5,6 +5,7 @@ FastAPI surface, stdlib-only)."""
 from __future__ import annotations
 
 import json
+import urllib.error
 import urllib.request
 
 from nyc_traffic_insight_spark.serving_http import (
@@ -146,14 +147,86 @@ def test_http_shell_over_spark(spark, tmp_path):
     path = str(tmp_path / "map_table")
     publish_map_table(feats, path)
     year = feats.select(F.year("ts")).first()[0]
-    want = feats.filter(
-        (F.lower("Borough") == "b3") & (F.year("ts") == year)
-    ).count()
+
+    def slice_count(df):
+        return df.filter(
+            (F.lower("Borough") == "b3") & (F.year("ts") == year)
+        ).count()
+
+    want = slice_count(feats)
 
     srv = serve(spark, path, map_fields={"label_field": "RequestID"})
     try:
         status, body = _get(srv, f"/map?borough=B3&year={year}")
         assert status == 200
         assert body.count("<circle") == want > 0
+        # republished in place (overwrite) with another row set: the
+        # next request lists the new files, it does not reuse the old
+        fewer = feats.filter(F.col("RequestID") % 3 != 0)
+        publish_map_table(fewer, path)
+        want_after = slice_count(fewer)
+        assert 0 < want_after < want
+        status, body = _get(srv, f"/map?borough=B3&year={year}")
+        assert status == 200
+        assert body.count("<circle") == want_after
+    finally:
+        srv.shutdown()
+
+
+def _post(srv, path, body: bytes):
+    port = srv.server_address[1]
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{port}{path}", data=body, method="POST"
+    )
+    try:
+        with urllib.request.urlopen(req) as r:
+            return r.status, json.loads(r.read())
+    except urllib.error.HTTPError as ex:
+        return ex.code, json.loads(ex.read())
+
+
+def test_http_predict_over_spark(spark, tmp_path):
+    """POST /predict against a real saved model: a good body is served
+    the 1-row pipeline's value; a NaN or a missing feature is the
+    client's error (400), not a failed Spark task (500)."""
+    import threading
+
+    from nyc_traffic_insight_spark.ml.pipelines import (
+        feature_table,
+        fit_linear_regression,
+        single_row_inference,
+    )
+    from nyc_traffic_insight_spark.serving import PredictService
+    from tests.conftest import SF_SMOKE
+
+    model = fit_linear_regression(feature_table(spark, SF_SMOKE))
+    path = str(tmp_path / "lr_model")
+    model.write().overwrite().save(path)
+    row = {
+        "l_quantity": 10.0,
+        "l_discount": 0.05,
+        "l_tax": 0.04,
+        "p_retailprice": 1500.0,
+        "qty_price": 15000.0,
+        "mth": 6.0,
+        "wd": 2.0,
+    }
+
+    srv = EngineHTTPServer(
+        ("127.0.0.1", 0), lambda b, y: [], PredictService(spark, path)
+    )
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        status, body = _post(srv, "/predict", json.dumps(row).encode())
+        assert status == 200
+        assert body["prediction"] == single_row_inference(spark, model, row)
+        # json.dumps spells a float NaN as the bare token NaN
+        nan_body = json.dumps(dict(row, l_tax=float("nan"))).encode()
+        assert b"NaN" in nan_body
+        status, body = _post(srv, "/predict", nan_body)
+        assert status == 400 and "NaN" in body["error"], body
+        missing = {k: v for k, v in row.items() if k != "mth"}
+        status, body = _post(srv, "/predict", json.dumps(missing).encode())
+        assert status == 400 and "mth" in body["error"], body
     finally:
         srv.shutdown()
