@@ -75,6 +75,20 @@ def register(
     return deco
 
 
+def materialize(df: DataFrame) -> DataFrame:
+    """The package's one lineage cut; chains call ``.transform(materialize)``.
+
+    Reliable ``checkpoint()`` when the session has a checkpoint dir
+    configured (the cluster profile: survives executor loss, required at
+    100 TB where an iteration's input must be re-readable); otherwise
+    ``localCheckpoint()`` — executor-loss-UNSAFE but zero-config, the
+    right trade on local[*] where executors and driver share one JVM.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint()
+    return df.localCheckpoint()
+
+
 # Registration-order rotation (VERDICT.md rounds 2-15). The driver's
 # sf0.01 correctness gate walks REGISTRY front-to-back with a
 # ~50-query budget (CORRECTNESS_r04-r15 each carried exactly 50

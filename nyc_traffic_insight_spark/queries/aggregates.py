@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nyc_traffic_insight_spark.queries import register
+from nyc_traffic_insight_spark.queries import materialize, register
 from nyc_traffic_insight_spark.sources import load_table
 from nyc_traffic_insight_spark.functions.rounding import exact_avg, exact_sum, r as _r
 
@@ -750,9 +750,9 @@ def _qdigest_sql(
 
     ``leaves_select`` does the same for the leaf histogram: the level
     tree references c10 transitively from every level, and CTE inlining
-    replicated the fact-table scan ~75× in the executed plan. The Spark
-    builder materializes the ≤1024-row histogram once (localCheckpoint)
-    from the SAME _qd_leaf_body text and points this parameter at it.
+    replicated the fact-table scan ~75× in the executed plan. A Spark
+    caller computes the ≤1024-row histogram once (``materialize``) from
+    the SAME _qd_leaf_body text and points this parameter at it.
 
     Every per-level body and the digest-read tail come from the
     fragment builders above (_qd_g_body / _qd_cnext_body / _qd_f_body /
@@ -817,7 +817,7 @@ def sketch_qdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the catalog's query-set broadcast — and how every production
     sketch library builds a digest: distributed histogram, in-memory
     compression). The r14 execution shape ran the ten ≤1024-row
-    carrier levels as localCheckpoint jobs — measured at a
+    carrier levels as lineage-cut jobs — measured at a
     scheduling-latency floor of ~13 sequential tiny jobs (~2.6–6.5 s
     wall at ANY SF, inflating 1:1 with host steal; two fewer-stage
     relational reworks both measured WORSE, NOTES r15). The digest is
@@ -1134,7 +1134,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: three groupBy(user_id) aggregations and two joins, all
     keyed on user_id — each stage shuffles its per-user table on that
-    one key inside its own materialized job (localCheckpoint below),
+    one key inside its own materialized job (``materialize`` below),
     and each stage's table shrinks monotonically (funnel!), so later
     joins broadcast. The final readout is three one-row stage-count
     merges (the SinglePartition exchanges accounted in
@@ -1152,7 +1152,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t0"))
-        .localCheckpoint()
+        .transform(materialize)
     )
     c = (
         ev.filter(F.col("event_type") == "click")
@@ -1160,7 +1160,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("ts") > F.col("t0"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
-        .localCheckpoint()
+        .transform(materialize)
     )
     p = (
         ev.filter(F.col("event_type") == "purchase")
@@ -1168,7 +1168,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("ts") > F.col("t1"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
-        .localCheckpoint()
+        .transform(materialize)
     )
 
     def stage(ord_: int, name: str, df: DataFrame) -> DataFrame:

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from nyc_traffic_insight_spark.artifacts import cached_json
-from nyc_traffic_insight_spark.queries import REGISTRY, register
+from nyc_traffic_insight_spark.queries import REGISTRY, materialize, register
 from nyc_traffic_insight_spark.sources import load_table
 from nyc_traffic_insight_spark.functions.rounding import r as _r
 
@@ -72,21 +72,6 @@ _NGRAM_JACCARD_SELECT = """
     JOIN cnt cb ON cb.doc_id = doc2
     WHERE CAST(c AS DOUBLE) / (ca.n + cb.n - c) >= 0.5
     """
-
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Truncate lineage for a loop-carried DataFrame.
-
-    Reliable ``checkpoint()`` when the session has a checkpoint dir
-    configured (the cluster profile: survives executor loss, required at
-    100 TB where an iteration's input must be re-readable); otherwise
-    ``localCheckpoint()`` — executor-loss-UNSAFE but zero-config, the
-    right trade on local[*] where executors and driver share one JVM.
-    """
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        return df.checkpoint()
-    return df.localCheckpoint()
 
 
 # One persisted, widened DataFrame per (application, sf_dir, table) for
@@ -780,7 +765,7 @@ def qa_lsh_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (review r13; same rationale as truth below)
     sig = _sig_from_shingles(
         ds.select("doc_id", F.explode("sh").alias("s"))
-    ).localCheckpoint()
+    ).transform(materialize)
     # truth feeds all |_SWEEP_GEOMS| one-row aggregates — materialize
     # the narrow pair list once (the pipeline_unimax_corpus
     # checkpoint rationale)
@@ -788,7 +773,7 @@ def qa_lsh_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ngram_jaccard_pairs(ds.select("doc_id", F.explode("sh").alias("s")))
         .select("doc1", "doc2")
         .withColumn("is_true", F.lit(True))
-        .localCheckpoint()
+        .transform(materialize)
     )
     rows = []
     for b, r in _SWEEP_GEOMS:
@@ -1425,7 +1410,7 @@ def qa_contamination_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(eval_set), "s", "left_semi")
         .distinct()
         .withColumn("is_hit", F.lit(True))
-        .localCheckpoint()  # feeds the n-gram count AND the doc join
+        .transform(materialize)  # feeds the n-gram count AND the doc join
     )
     # four one-row aggregates crossJoined — fully engine-side and
     # lazy (the qa_freshness_audit one-row-constant shape); each
@@ -3880,13 +3865,13 @@ def min_label_components(
     a dedup pipeline can have. Differentially tested against Python
     union-find on adversarial graphs (paths, cycles, stars) in
     tests/test_textops_graph.py."""
-    edges = _materialize(
+    edges = materialize(
         pairs.select(F.col(col_a).alias("a"), F.col(col_b).alias("b"))
         .unionByName(
             pairs.select(F.col(col_b).alias("a"), F.col(col_a).alias("b"))
         )
     )  # the loop reuses edges every round
-    labels = _materialize(
+    labels = materialize(
         edges.select(F.col("a").alias("v"))
         .distinct()
         .withColumn("label", F.col("v"))
@@ -3898,7 +3883,7 @@ def min_label_components(
             .groupBy(F.col("a").alias("v2"))
             .agg(F.min("label").alias("nmin"))
         )
-        labels = _materialize(
+        labels = materialize(
             labels.join(neigh, labels.v == neigh.v2, "left")
             .select(
                 "v",
@@ -4670,7 +4655,7 @@ register(
 # window ids. Scale shape: the union of its parts — the rule gate is
 # a pure map, packing is the two-phase prefix sum, the shuffle is the
 # two-phase hash rank; the manifest (corpus_tokens/L rows) is
-# localCheckpointed once because it feeds both the shuffle and the
+# materialized once because it feeds both the shuffle and the
 # final stats join. Registered r13 (the register call follows the
 # oracle and its late-import helper below).
 
@@ -4692,7 +4677,7 @@ def pipeline_pretrain_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     surv_docs = d.join(surv, "doc_id").select("doc_id", "text")
     wins = pack_manifest_frame(
         surv_docs, _CTX_LEN, _PACK_BUCKET
-    ).localCheckpoint()
+    ).transform(materialize)
     shuf = epoch_shuffle_frame(
         wins.select(F.col("window_id").alias("doc_id")),
         _ORDER_EPOCHS,

@@ -24,9 +24,9 @@ import itertools as _itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nyc_traffic_insight_spark.queries import register
+from nyc_traffic_insight_spark.queries import materialize, register
 from nyc_traffic_insight_spark.functions.rounding import r as _r, r4_sql
-from nyc_traffic_insight_spark.queries.textops import _docs, _materialize
+from nyc_traffic_insight_spark.queries.textops import _docs
 
 
 _VOCAB_TOPK = 100
@@ -256,7 +256,7 @@ def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("term")
         # bounded-k table materialized once so the scoring join doesn't
         # re-derive the vocabulary's corpus scan
-        .localCheckpoint()
+        .transform(materialize)
     )
     flagged = words.join(
         F.broadcast(ranked.withColumn("in_vocab", F.lit(1))), "term", "left"
@@ -766,7 +766,7 @@ def bpe_encode_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     (token, Σfreq) per batch so the only shuffle is the map-side
     partially-aggregated token histogram. This replaced the r14
     relational window cascade (5 window passes × _BPE_MERGES merges
-    over the exploded symbol table + a localCheckpoint every 4 merge
+    over the exploded symbol table + a lineage cut every 4 merge
     bodies): same fold, zero window shuffles, zero checkpoints, one
     job instead of ~5 (bench median 7.3 s → ~1.5 s at sf0.1). A
     drained trainer (k < _BPE_MERGES merges) applies k replaces; the
@@ -776,7 +776,7 @@ def bpe_encode_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     (token, n_occurrences), _BPE_TOP_TOKENS rows max, ties broken by
     token ASC."""
     v = f"__bpe{next(_BPE_SEQ)}"
-    wf = _materialize(_bpe_wf(spark, sf_dir))
+    wf = materialize(_bpe_wf(spark, sf_dir))
     wf.createOrReplaceTempView(f"{v}_wf")
     try:
         merges = _bpe_train_local(_bpe_collect_vocab(spark, f"{v}_wf"))
@@ -1071,10 +1071,10 @@ def _lm_run_chain(
         .select("doc_id", "p.w1", "p.w2")
         .createOrReplaceTempView(f"{v}_pairs")
     )
-    _materialize(
+    materialize(
         spark.sql(_lm_vocab_body(f"{v}_toks", cap))
     ).createOrReplaceTempView(f"{v}_vocab")
-    _materialize(
+    materialize(
         spark.sql(
             f"WITH mpairs AS ({_lm_mpairs_body(f'{v}_pairs', f'{v}_vocab')}) "
             + _lm_bg_body("mpairs")

@@ -13,6 +13,7 @@ hash) from a genuine semantic difference.
 
 from __future__ import annotations
 
+import glob
 import math
 import os
 
@@ -34,9 +35,13 @@ def duck_connect(sf_dir: str):
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.isdir(p):
-            # Spark-written scratch corpora (the decade/L3 probes) are
-            # directory tables; read their part files recursively.
+            # Spark-written scratch corpora are directory tables; read
+            # their part files recursively. A directory with no part
+            # file (an empty or unfinished write) is skipped like a
+            # missing table: its view would only fail at query time.
             p = os.path.join(p, "**", "*.parquet")
+            if not glob.glob(p, recursive=True):
+                continue
         elif not os.path.exists(p):
             continue
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")

@@ -46,6 +46,26 @@ def test_catches_null_flip():
         compare(bad, BASE, "null_flip")
 
 
+def test_duck_connect_skips_directory_table_without_part_files(tmp_path):
+    """A ``<table>.parquet/`` directory with no part file (an empty or
+    unfinished write) is skipped like a missing table; a populated
+    directory table registers and reads."""
+    from tests.oracle_utils import duck_connect
+
+    (tmp_path / "orders.parquet").mkdir()
+    (tmp_path / "orders.parquet" / "_SUCCESS").touch()
+    (tmp_path / "region.parquet").mkdir()
+    BASE.to_parquet(tmp_path / "region.parquet" / "part-00000.parquet")
+    con = duck_connect(str(tmp_path))
+    try:
+        views = con.execute("SELECT view_name FROM duckdb_views()").fetchall()
+        assert ("region",) in views
+        assert ("orders",) not in views
+        assert con.execute("SELECT count(*) FROM region").fetchone()[0] == len(BASE)
+    finally:
+        con.close()
+
+
 def test_samplingq_imports_standalone():
     """Import samplingq FIRST in a fresh interpreter. load_all() (and
     most of the suite) always imports textops before samplingq, so a
